@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import weakref
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -199,6 +200,7 @@ def iterate(
     probe_initial=None,
     no_convergence_error: str | None = None,
     release: tuple[DataFrame, ...] = (),
+    finish=None,
 ) -> DataFrame:
     """The shared iterate-until-done loop for every DataFrame-expressed
     graph/ML algorithm (connected components, PageRank, label propagation,
@@ -238,7 +240,17 @@ def iterate(
         checkpointed so the caller's plan never reaches back through
         released round frames; then the last round state and every frame
         in ``release`` (static inputs the caller checkpointed, e.g. the
-        edge set) are dropped — on success AND on failure.
+        edge set) are dropped — on success AND on failure;
+      * ``finish(state, metric, rounds_done) -> DataFrame | None``
+        (optional, probe loops only) is the size-gated exit: it is offered
+        the state before round 0 (``metric`` = ``probe_initial``) and after
+        every unconverged round (``metric`` = that round's probe value), so
+        the gate reads counts the loop already takes and costs no job. A
+        frame it returns IS the result and the loop stops — it must read
+        no round frame (a local finish collects the state and rebuilds the
+        result from driver-side data), so it is not re-checkpointed and the
+        usual releases still run. Large states keep the distributed rounds
+        until they shrink below the caller's gate.
 
     Post-condition (the storage contract tests/test_llm_hygiene.py pins):
     the ONLY persisted blocks surviving the call belong to the returned
@@ -247,7 +259,10 @@ def iterate(
     prev_metric = probe_initial
     try:
         done = False
+        result = None if finish is None else finish(state, prev_metric, 0)
         for i in range(max_rounds):
+            if result is not None:
+                break
             new = step(state, i)
             if checkpoint_rounds:
                 if probe is not None:
@@ -299,6 +314,10 @@ def iterate(
             state = new
             if done:
                 break
+            if finish is not None:
+                result = finish(state, metric, i + 1)
+        if result is not None:
+            return result
         if (converged is not None or probe is not None) and not done:
             raise RuntimeError(
                 no_convergence_error or f"iterate: no convergence in {max_rounds} rounds"
@@ -311,6 +330,121 @@ def iterate(
             release_result(state)
         for df in release:
             release_result(df)
+
+
+# ---------------------------------------------------------------------------
+# Local finish: one NumPy union-find for graphs that fit on the driver
+# ---------------------------------------------------------------------------
+
+# Edge-count gate of the local finish; None derives it from the driver's
+# memory (local_finish_max_rows). 0 keeps every graph on the distributed
+# loop — tests pin it to exercise both paths; it is not a user option.
+LOCAL_FINISH_MAX_ROWS: int | None = None
+# Driver bytes one edge may cost in a local finish (the Arrow collect, its
+# NumPy copies, dense ids, ranks and parent vectors), and the share of the
+# driver heap a local finish may take: a 1 GiB driver finishes graphs of up
+# to 256k edges locally, a 16 GiB one up to 4M.
+LOCAL_FINISH_EDGE_BYTES = 256
+LOCAL_FINISH_HEAP_SHARE = 1 / 16
+
+
+def local_finish_max_rows(spark: SparkSession) -> int:
+    """The most edges a loop may hand to the driver-side finish. It
+    follows ``spark.driver.memory`` (Spark's own default 1g when unset)
+    because the driver is where the collected edge set and the NumPy
+    working arrays live: a bigger driver finishes bigger graphs locally,
+    and a graph above the gate never leaves the executors."""
+    if LOCAL_FINISH_MAX_ROWS is not None:
+        return LOCAL_FINISH_MAX_ROWS
+    mem = spark.sparkContext.getConf().get("spark.driver.memory", "1g")
+    mb = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsMb(mem)
+    return int(mb * 2**20 * LOCAL_FINISH_HEAP_SHARE) // LOCAL_FINISH_EDGE_BYTES
+
+
+def _collect_local_finish(df: DataFrame, op: str, rounds_done: int, n_edges: int):
+    """``df.toArrow()`` in one job whose description names the switch
+    (``<op>: local finish at round r, n edges``), so the event log's
+    JobStart properties show which path ran. The caller's description is
+    restored afterwards."""
+    sc = df.sparkSession.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"{op}: local finish at round {rounds_done}, {n_edges} edges")
+    try:
+        return df.toArrow()
+    finally:
+        sc.setJobDescription(prev)
+
+
+def _uf_merge(parent: np.ndarray, u: np.ndarray, v: np.ndarray) -> np.ndarray:
+    """Merge the components the dense-id pairs (u, v) connect into the
+    flat forest ``parent`` (every entry a root) and return it flat again.
+    Hook-and-compress: each pair still crossing two roots hooks the larger
+    root under the smaller one (``minimum.at`` keeps the smallest offer),
+    then pointer jumping flattens every tree. Roots only ever move to
+    smaller ids, so each root is its component's minimum id."""
+    while True:
+        pu, pv = parent[u], parent[v]
+        cross = pu != pv
+        if not cross.any():
+            return parent
+        pu, pv, u, v = pu[cross], pv[cross], u[cross], v[cross]
+        np.minimum.at(parent, np.maximum(pu, pv), np.minimum(pu, pv))
+        while True:
+            nxt = parent[parent]
+            if np.array_equal(nxt, parent):
+                break
+            parent = nxt
+
+
+def _dense_ids(a: np.ndarray, b: np.ndarray):
+    """Sorted distinct ids of the pairs and the pairs as dense indices into
+    them — order-preserving, so the minimum dense id is the minimum id."""
+    nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    return nodes, inv[: len(a)], inv[len(a):]
+
+
+def union_find_labels(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(nodes, labels): the sorted distinct node ids of the undirected pairs
+    (a, b) and each node's component-minimum id — the labels every correct
+    connected-components algorithm returns."""
+    nodes, u, v = _dense_ids(a, b)
+    return nodes, nodes[_uf_merge(np.arange(len(nodes)), u, v)]
+
+
+def boruvka_forest(a: np.ndarray, b: np.ndarray, w: np.ndarray, max_rounds: int) -> np.ndarray | None:
+    """Indices of the minimum spanning forest's edges by Boruvka's rounds
+    on the shared union-find, or None if edges were still being picked
+    after ``max_rounds`` rounds (the last round must pick nothing, exactly
+    as in graph_mst's distributed loop). Each component claims its minimum
+    cross edge by rank under the (w, a, b) total order; that order makes
+    the forest unique, so any correct MSF algorithm picks the same edges."""
+    nodes, u, v = _dense_ids(a, b)
+    order = np.lexsort((b, a, w))
+    rank = np.empty(len(a), dtype=np.int64)
+    rank[order] = np.arange(len(a))
+    parent = np.arange(len(nodes))
+    picked = np.zeros(len(a), dtype=bool)
+    for _ in range(max_rounds):
+        cu, cv = parent[u], parent[v]
+        cross = cu != cv
+        if not cross.any():
+            return np.flatnonzero(picked)
+        best = np.full(len(nodes), len(a))
+        np.minimum.at(best, cu[cross], rank[cross])
+        np.minimum.at(best, cv[cross], rank[cross])
+        sel = order[best[best < len(a)]]
+        picked[sel] = True
+        parent = _uf_merge(parent, u[sel], v[sel])
+    return None
+
+
+def _arrow_frame(spark: SparkSession, schema, columns: list[np.ndarray]) -> DataFrame:
+    """A DataFrame over driver-side arrays, built JVM-side from Arrow
+    batches (no Python worker, no job), with the distributed path's exact
+    schema."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table(dict(zip(schema.names, columns))), schema)
 
 
 # MinHash parameters: 12 permutations, 4 bands x 3 rows => LSH similarity
@@ -1023,7 +1157,22 @@ def connected_components(pairs: DataFrame, max_rounds: int = 25) -> DataFrame:
         anti-join ``isEmpty`` confirmation runs only when consecutive
         counts match (r11 optimization round, second pass — one job per
         round instead of checkpoint-then-count).
+
+    Size-gated local finish: the rounds are bound by driver round trips,
+    not data, once the edge set is small (a 25-edge graph paid ~23 jobs).
+    So whenever the edge count — the upfront count fused into the
+    ``edges0`` checkpoint before round 0, then each round's fused probe —
+    is at most :func:`local_finish_max_rows` (derived from the driver's
+    memory, which is what must hold the collected edges), the state is
+    collected in one ``toArrow()`` job and finished by the NumPy
+    union-find; the labels return through ``createDataFrame`` over Arrow
+    (JVM-side, no Python worker). Large graphs keep the distributed rounds
+    until they shrink below the gate. The result is identical: the star
+    rounds preserve every node and every component, and min-id labels
+    are the unique answer of any correct algorithm.
     """
+    from pyspark.sql import Observation
+
     # Canonical directed edges u -> v with u > v (self-loops dropped).
     edges0 = (
         pairs.select(
@@ -1032,7 +1181,10 @@ def connected_components(pairs: DataFrame, max_rounds: int = 25) -> DataFrame:
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    edges0 = local_checkpoint(edges0)
+    # The edge count rides the checkpoint job as an Observation: it sizes
+    # the round width and feeds the local-finish gate with no count job.
+    n_obs = Observation("cc_edges")
+    edges0 = local_checkpoint(edges0.observe(n_obs, F.count(F.lit(1)).alias("n")))
     # Nodes from the checkpointed edge set — the pair pipeline above is
     # evaluated exactly once (pairs with doc_a == doc_b don't occur in the
     # LSH outputs, so no node is lost to the self-loop filter).
@@ -1042,7 +1194,7 @@ def connected_components(pairs: DataFrame, max_rounds: int = 25) -> DataFrame:
         .distinct()
     )
     spark = pairs.sparkSession
-    n_edges = edges0.count()
+    n_edges = n_obs.get["n"]
     # Adaptive round parallelism: the loop runs ~5 shuffles per round,
     # and AQE cannot coalesce ACROSS the checkpoint boundaries, so size
     # the round width from the measured edge count (~500k edges per
@@ -1109,6 +1261,15 @@ def connected_components(pairs: DataFrame, max_rounds: int = 25) -> DataFrame:
             .select("doc", F.coalesce("cluster", F.col("doc")).alias("cluster"))
         )
 
+    max_rows = local_finish_max_rows(spark)
+
+    def local_finish(edges: DataFrame, n: int, rounds_done: int) -> DataFrame | None:
+        if n > max_rows:
+            return None
+        tbl = _collect_local_finish(edges, "connected_components", rounds_done, n)
+        nodes_, labels = union_find_labels(tbl.column("u").to_numpy(), tbl.column("v").to_numpy())
+        return _arrow_frame(spark, star_result(edges).schema, [nodes_, labels])
+
     return iterate(
         edges0,
         star_round,
@@ -1128,6 +1289,7 @@ def connected_components(pairs: DataFrame, max_rounds: int = 25) -> DataFrame:
         converged=star_confirm,
         no_convergence_error=f"connected_components: no convergence in {max_rounds} rounds",
         release=(edges0,),
+        finish=None if max_rows == 0 else local_finish,
     )
 
 
@@ -3018,18 +3180,48 @@ def graph_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps storage flat. Oracle: the same rounds unrolled with the
     condensed CC chain embedded per round (semantics unchanged — CC
     labels and composed labels induce the same partition, and the MST
-    edge set is unique under the (w, a, b) total order)."""
+    edge set is unique under the (w, a, b) total order).
+
+    Size-gated local finish: when the edge count (an Observation fused
+    into the edge checkpoint) is at most :func:`local_finish_max_rows`,
+    which follows the driver's memory because the driver holds the
+    collected edges, the edge set is collected in one ``toArrow()`` job
+    and :func:`boruvka_forest` runs the same rounds in NumPy on the shared
+    union-find, with the same MST_ROUNDS + 1 cap and error. Because the
+    (w, a, b) order makes the forest unique, the output is identical;
+    larger graphs run the distributed rounds below."""
     from pyspark.sql import Observation
+    from pyspark.sql.types import StructField, StructType
 
     import functools
 
     _ckpt = functools.partial(local_checkpoint, fresh_stats=True)
 
     ph = dedup_simhash(spark, sf_dir)
+    n_obs = Observation("mst_edges")
     edges = _ckpt(
         ph.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"), F.col("hamming").alias("w"))
+        .observe(n_obs, F.count(F.lit(1)).alias("n"))
     )
     release_result(ph)
+    n_edges = n_obs.get["n"]
+    max_rows = local_finish_max_rows(spark)
+    if 0 < max_rows and n_edges <= max_rows:
+        # Nullable like the distributed output, whose columns come out of
+        # a min(struct) aggregate.
+        schema = StructType(
+            [StructField(n, f.dataType, True) for n, f in zip(("doc_a", "doc_b", "weight"), edges.schema)]
+        )
+        try:
+            tbl = _collect_local_finish(edges, "graph_mst", 0, n_edges)
+        finally:
+            release_result(edges)
+        a, b, w = (tbl.column(c).to_numpy() for c in ("a", "b", "w"))
+        forest = boruvka_forest(a, b, w, MST_ROUNDS + 1)
+        if forest is None:
+            raise RuntimeError(f"graph_mst: still growing after {MST_ROUNDS + 1} rounds")
+        forest = forest[np.lexsort((b[forest], a[forest]))]
+        return _arrow_frame(spark, schema, [a[forest], b[forest], w[forest]])
     labels = _ckpt(
         edges.select(F.col("a").alias("doc")).union(edges.select("b")).distinct()
         .select("doc", F.col("doc").alias("comp"))

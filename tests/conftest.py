@@ -21,3 +21,13 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def distributed_loop(monkeypatch):
+    """Local-finish gate 0: connected components and MST run their
+    distributed rounds, the only path for graphs above the gate (every
+    test fixture fits under the default gate)."""
+    from sol_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "LOCAL_FINISH_MAX_ROWS", 0)

@@ -12,16 +12,40 @@ repeated invocations do not grow executor storage.
 
 from __future__ import annotations
 
+import re
+
+import numpy as np
+
+from sol_spark.operators import dedup
 from sol_spark.operators.dedup import (
+    boruvka_forest,
     connected_components,
     dedup_clusters,
     dedup_minhash_lsh,
     release_result,
+    union_find_labels,
 )
 
 
 def _n_persistent(spark) -> int:
     return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
+def union_find(edges, nodes):
+    """Driver-side reference: every node labeled with its component minimum."""
+    parent = {n: n for n in nodes}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in nodes}
 
 
 def test_minhash_retains_only_result(spark, sf_dir):
@@ -52,6 +76,10 @@ def test_clusters_bounded_storage(spark, sf_dir):
     assert _n_persistent(spark) <= baseline
 
 
+def test_clusters_bounded_storage_distributed(spark, sf_dir, distributed_loop):
+    test_clusters_bounded_storage(spark, sf_dir)
+
+
 def test_connected_components_adversarial_chain(spark):
     """Long-path graph — the shape that defeats O(diameter) label
     propagation. Large-star/small-star must converge in O(log n) rounds:
@@ -68,6 +96,52 @@ def test_connected_components_adversarial_chain(spark):
     assert all(r.cluster == 0 for r in out)
 
 
+def test_connected_components_adversarial_chain_distributed(spark, distributed_loop):
+    test_connected_components_adversarial_chain(spark)
+
+
+def _local_finish_jobs(spark, op: str) -> list[str]:
+    """Descriptions of the jobs that collected a local finish of ``op``,
+    read from Spark's status store (the event log's JobStart properties)
+    once the listener bus has delivered every event posted so far."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    descs = []
+    for i in range(jobs.size()):
+        d = jobs.apply(i).description()
+        if d.isDefined() and d.get().startswith(f"{op}: local finish"):
+            descs.append(d.get())
+    return descs
+
+
+def test_connected_components_switches_mid_loop(spark, monkeypatch):
+    """A graph above the gate runs distributed rounds until its edge set
+    shrinks below it, then finishes locally with identical labels. A plain
+    chain keeps n - 1 edges in every round, so this 200-node chain carries
+    skip-2 chords: 397 edges before round 0, 294 after round 5, 199 at the
+    fixed point; the gate of 300 fires between."""
+    n = 200
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)] + [(i, i + 2) for i in range(n - 2)],
+        "doc_a long, doc_b long",
+    )
+    monkeypatch.setattr(dedup, "LOCAL_FINISH_MAX_ROWS", 0)
+    want_df = connected_components(pairs)
+    want = sorted(want_df.collect())
+    release_result(want_df)
+    monkeypatch.setattr(dedup, "LOCAL_FINISH_MAX_ROWS", 300)
+    before = set(_local_finish_jobs(spark, "connected_components"))
+    got_df = connected_components(pairs)
+    got = sorted(got_df.collect())
+    release_result(got_df)
+    fired = [d for d in _local_finish_jobs(spark, "connected_components") if d not in before]
+    assert got == want and len(got) == n and {r.cluster for r in got} == {0}
+    assert len(fired) == 1, fired
+    m = re.fullmatch(r"connected_components: local finish at round (\d+), (\d+) edges", fired[0])
+    assert m and int(m[1]) > 0 and int(m[2]) <= 300, fired
+
+
 def test_connected_components_multi_component(spark):
     """Two stars + one triangle + an isolated edge resolve to min-id labels."""
     pairs = spark.createDataFrame(
@@ -80,31 +154,17 @@ def test_connected_components_multi_component(spark):
     assert got == {10: 10, 11: 10, 12: 10, 20: 20, 21: 20, 22: 20, 30: 30, 31: 30}
 
 
+def test_connected_components_multi_component_distributed(spark, distributed_loop):
+    test_connected_components_multi_component(spark)
+
+
 def test_connected_components_property_random_graphs(spark):
     """Property-based check (hypothesis; goes beyond the reference's limited
-    randomized coverage, SURVEY §5.6): on random edge lists, the distributed
-    star-contraction labels must equal a driver-side union-find — for any
-    graph shape, not just the adversarial fixtures above."""
+    randomized coverage, SURVEY §5.6): on random edge lists, the
+    connected-components labels must equal a driver-side union-find — for
+    any graph shape, not just the adversarial fixtures above."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
-
-    from sol_spark.operators.dedup import connected_components, release_result
-
-    def union_find(edges, nodes):
-        parent = {n: n for n in nodes}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        # Label every node with its component minimum.
-        return {n: find(n) for n in nodes}
 
     @settings(
         max_examples=6,
@@ -128,6 +188,88 @@ def test_connected_components_property_random_graphs(spark):
         assert got == want
 
     check()
+
+
+def test_connected_components_property_random_graphs_distributed(spark, distributed_loop):
+    test_connected_components_property_random_graphs(spark)
+
+
+def test_connected_components_empty_graph_schema(spark, monkeypatch):
+    """An empty edge set yields an empty frame with the distributed path's
+    exact schema (names, types, nullability) on the local path too."""
+    for dtype in ("long", "int"):
+        pairs = spark.createDataFrame([], f"doc_a {dtype}, doc_b {dtype}")
+        out = {}
+        for gate in (0, None):
+            monkeypatch.setattr(dedup, "LOCAL_FINISH_MAX_ROWS", gate)
+            df = connected_components(pairs)
+            out[gate] = (df.schema, df.collect())
+            release_result(df)
+        assert out[0] == out[None] and out[None][1] == []
+
+
+def test_union_find_labels_duplicate_and_reversed_pairs():
+    a = np.array([5, 9, 5, 7, 3, 8], dtype=np.int64)
+    b = np.array([9, 5, 9, 3, 7, 8], dtype=np.int64)
+    nodes, labels = union_find_labels(a, b)
+    assert nodes.tolist() == [3, 5, 7, 8, 9]
+    assert labels.tolist() == [3, 5, 3, 8, 5]
+    nodes, labels = union_find_labels(np.array([], dtype=np.int64), np.array([], dtype=np.int64))
+    assert len(nodes) == len(labels) == 0
+
+
+def test_union_find_labels_match_python_reference():
+    rng = np.random.default_rng(7)
+    for n_nodes, n_edges in [(2, 1), (30, 10), (30, 40), (200, 150), (1000, 3000), (5000, 2000)]:
+        a = rng.integers(0, n_nodes, n_edges) * 3 + 11  # sparse, offset ids
+        b = rng.integers(0, n_nodes, n_edges) * 3 + 11
+        nodes, labels = union_find_labels(a, b)
+        want = union_find(zip(a.tolist(), b.tolist()), sorted(set(a.tolist()) | set(b.tolist())))
+        assert dict(zip(nodes.tolist(), labels.tolist())) == want
+
+
+def _kruskal(a, b, w) -> list[tuple[int, int, int]]:
+    """Brute-force Kruskal under the (w, a, b) total order."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    out = []
+    for e in sorted(zip(w.tolist(), a.tolist(), b.tolist())):
+        ra, rb = find(e[1]), find(e[2])
+        if ra != rb:
+            parent[ra] = rb
+            out.append((e[1], e[2], e[0]))
+    return sorted(out)
+
+
+def test_boruvka_forest_matches_kruskal_with_tied_weights():
+    rng = np.random.default_rng(11)
+    for n_nodes, n_edges in [(2, 1), (10, 30), (60, 80), (300, 1200), (2000, 2500)]:
+        a = rng.integers(0, n_nodes, n_edges)
+        b = rng.integers(0, n_nodes, n_edges)
+        keep = a != b
+        a, b = a[keep], b[keep]
+        w = rng.integers(0, 4, len(a))  # few weights: many ties
+        forest = boruvka_forest(a, b, w, 64)
+        got = sorted(zip(a[forest].tolist(), b[forest].tolist(), w[forest].tolist()))
+        assert got == _kruskal(a, b, w)
+    empty = np.array([], dtype=np.int64)
+    assert len(boruvka_forest(empty, empty, empty, 1)) == 0
+
+
+def test_boruvka_forest_round_cap():
+    """A 64-node path weighted by the trailing-zero count of i + 1 merges
+    only pairs of components per round: 6 picking rounds plus the empty
+    confirming one, so a cap of 6 reports it still growing."""
+    a = np.arange(63)
+    b = a + 1
+    w = np.array([((i + 1) & -(i + 1)).bit_length() - 1 for i in range(63)])
+    assert boruvka_forest(a, b, w, 6) is None
+    assert len(boruvka_forest(a, b, w, 7)) == 63
 
 
 def test_local_checkpoint_records_rdd_id(spark):

@@ -26,3 +26,33 @@ def test_query_matches_oracle(name: str, spark, sf_dir: str) -> None:
         return
     ok, msg = compare(df, spec.oracle, sf_dir)
     assert ok, f"{name}: {msg}"
+
+
+# Every registered query whose builder reaches connected_components or
+# graph_mst (found by running every builder with the two functions wrapped).
+# The sf0.001 fixtures all fit under the default local-finish gate, so the
+# distributed rounds, which serve every graph above it, get their own
+# strict check here.
+LOCAL_FINISH_QUERIES = (
+    "dedup_cc_incremental",
+    "dedup_cluster_cohesion",
+    "dedup_cluster_size_hist",
+    "dedup_clusters",
+    "dedup_ensemble_clusters",
+    "dedup_keep_best_quality",
+    "dedup_keep_list",
+    "dedup_rand_index",
+    "dedup_rate_by_source",
+    "dedup_representatives",
+    "dedup_simhash_clusters",
+    "er_clusters",
+    "er_survivorship",
+    "graph_mst",
+    "graph_mst_cut_profile",
+)
+
+
+@pytest.mark.parametrize("name", LOCAL_FINISH_QUERIES)
+def test_query_matches_oracle_distributed_loop(name: str, spark, sf_dir: str, distributed_loop) -> None:
+    ok, msg = compare(SPECS[name].fn(spark, sf_dir), SPECS[name].oracle, sf_dir, exact=True)
+    assert ok, f"{name}: {msg}"

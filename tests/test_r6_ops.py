@@ -807,6 +807,10 @@ def test_mst_is_minimum_spanning_forest(spark, sf_dir):
     assert sum(w for _, _, w in mst) == kruskal_w
 
 
+def test_mst_is_minimum_spanning_forest_distributed(spark, sf_dir, distributed_loop):
+    test_mst_is_minimum_spanning_forest(spark, sf_dir)
+
+
 def test_mst_cut_profile_consistency(spark, sf_dir):
     """The dendrogram profile must agree with the rest of the graph
     stack: at the maximum cut level the cluster count equals the simhash
