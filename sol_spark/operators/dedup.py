@@ -44,12 +44,16 @@ def _lazy_plan(fn):
     plan construction is driver latency paid inside the timed region by
     every consumer and every bench re-run).
 
-    ONLY for builders with NO action, checkpoint, or collect inside: the
-    cached value is an immutable lazy plan, so every consumer action still
-    recomputes from the parquet inputs — nothing is materialized and no
-    result is stored (a builder that checkpoints, e.g.
-    ``_minhash_lsh_impl``, must never be wrapped: memoizing materialized
-    state would be cross-run result caching AND a released-storage bug).
+    ONLY for builders with NO persist, action, checkpoint, or collect
+    inside: the cached value is an immutable lazy plan, so every consumer
+    action still recomputes from the parquet inputs — nothing is
+    materialized and no result is stored. Memoizing materialized state
+    would be cross-run result caching AND a released-storage bug, so a
+    feeder becomes memoizable exactly when it persists nothing
+    (``_minhash_pairs_plan`` qualified once its persisted shingle rows
+    gave way to one per-document aggregate). Consumers build a new
+    Dataset on the cached plan (``select``/``orderBy``/``observe``), so
+    each call re-optimizes and re-plans it over fresh parquet scans.
     Weakly keyed on the session object so entries die with their session."""
     import functools
 
@@ -562,6 +566,14 @@ def hashed_rows_from_docs(docs: DataFrame) -> DataFrame:
     )
 
 
+def _minhash_aggs() -> list:
+    """The N_HASHES min-over-permutation aggregates h0..h{N-1}."""
+    return [
+        F.min((F.col("h") * MINHASH_A[i] + MINHASH_B[i]) % MINHASH_P).alias(f"h{i}")
+        for i in range(N_HASHES)
+    ]
+
+
 def minhash_signature_df(rows: DataFrame) -> DataFrame:
     """(doc_id, h) hashed rows -> (doc_id, h0..h{N-1}) minhash signature.
 
@@ -571,11 +583,22 @@ def minhash_signature_df(rows: DataFrame) -> DataFrame:
     slower (subtree re-evaluated per self-join reference); N md5s per
     shingle ~3x slower (string hashing dominates) — integer permutations
     keep the whole pipeline in whole-stage codegen."""
-    aggs = [
-        F.min((F.col("h") * MINHASH_A[i] + MINHASH_B[i]) % MINHASH_P).alias(f"h{i}")
-        for i in range(N_HASHES)
-    ]
-    return rows.groupBy("doc_id").agg(*aggs)
+    return rows.groupBy("doc_id").agg(*_minhash_aggs())
+
+
+def _minhash_doc_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ONE aggregate per document over the hashed shingle rows: the
+    signature h0..h{N-1}, the shingle-row count ``n`` and ``hs`` =
+    collect_list(h), the document's hashed shingles WITH multiplicity
+    (two distinct shingles that collide in 32 bits stay two entries, as
+    in the oracle's ``sh`` CTE). Everything the pair plan needs per
+    document comes from this one frame, so nothing upstream is persisted.
+    Column pruning splits it per consumer: the band side keeps only the
+    signature, the join back only (n, hs), so one action shingles the
+    documents twice (once per pruned aggregate)."""
+    return hashed_shingle_rows_df(spark, sf_dir).groupBy("doc_id").agg(
+        *_minhash_aggs(), F.count(F.lit(1)).alias("n"), F.collect_list("h").alias("hs")
+    )
 
 
 def _band_df(sig: DataFrame) -> DataFrame:
@@ -591,6 +614,66 @@ def _band_df(sig: DataFrame) -> DataFrame:
         ]
     )
     return sig.select("doc_id", F.posexplode(band_keys).alias("band", "band_key"))
+
+
+def _lsh_candidates(sig: DataFrame) -> DataFrame:
+    """Signature frame -> distinct (doc_a, doc_b) LSH candidate pairs,
+    doc_a < doc_b: the band self-join on (band, band_key), never the
+    O(n^2) cross product."""
+    bands = _band_df(sig)
+    return (
+        bands.alias("a")
+        # shuffle_hash hint (r11 optimization round): the default broadcast
+        # build re-ran the signature aggregate for the build side; with both
+        # sides shuffling on (band, band_key) over identical children,
+        # ReuseExchange evaluates the signature pipeline once.
+        .join(bands.alias("b").hint("shuffle_hash"), ["band", "band_key"])
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
+
+
+# Multiset intersection size Σ_h ca(h)·cb(h) of two hashed-shingle lists:
+# every entry of hs_a counts its equal entries in hs_b. Quadratic in the
+# list lengths, so it runs only for pairs where a document holds a 32-bit
+# hash collision (about n²/2^33 of n-shingle documents).
+_NI_MULTISET = "aggregate(hs_a, 0L, (acc, x) -> acc + size(filter(hs_b, y -> y = x)))"
+
+
+def _candidate_overlap(cand: DataFrame, agg: DataFrame, *cols: str) -> DataFrame:
+    """Candidate pairs joined back to the per-document aggregate ->
+    (doc_a, doc_b, ni, nu, <cols suffixed _a/_b>): ``ni`` the exact
+    intersection of the two hashed-shingle multisets (the oracle's
+    ``inter`` count), ``nu`` = na + nb - ni. ``size(array_intersect)`` is
+    exact only for duplicate-free lists, so it serves the pairs whose
+    both documents have ``size(array_distinct(hs)) = n``; a document
+    with a colliding hash takes the per-value product."""
+
+    def side(s: str) -> DataFrame:
+        return agg.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            F.col("n").alias(f"n_{s}"),
+            F.col("hs").alias(f"hs_{s}"),
+            (F.size(F.array_distinct("hs")) == F.col("n")).alias(f"set_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in cols],
+        )
+
+    ni = (
+        F.when(F.col("set_a") & F.col("set_b"), F.size(F.array_intersect("hs_a", "hs_b")))
+        .otherwise(F.expr(_NI_MULTISET))
+        .cast("long")
+    )
+    return (
+        cand.join(side("a"), "doc_a")
+        .join(side("b"), "doc_b")
+        .withColumn("ni", ni)
+        .withColumn("nu", F.col("n_a") + F.col("n_b") - F.col("ni"))
+        .select(
+            "doc_a", "doc_b", "ni", "nu",
+            *[f"{c}_{s}" for c in cols for s in ("a", "b")],
+        )
+    )
 
 
 DEDUP_MINHASH_ORACLE = f"""
@@ -639,80 +722,56 @@ ORDER BY doc_a, doc_b
 """
 
 
+@_lazy_plan
+def _minhash_pairs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The MinHash pair set as ONE lazy plan that persists nothing:
+    unsorted (doc_a, doc_b, jaccard_bp), memoized per (session, sf_dir).
+
+    One aggregate per document (:func:`_minhash_doc_agg`) feeds both the
+    band self-join and, for the distinct candidate pairs only, the join
+    back for (n, hs) that prices the exact Jaccard. There is no persisted
+    shingle frame, no count job and no per-pair re-aggregation, so the
+    plan holds no materialized state and can be memoized: consumers pay
+    plan construction and analysis once per session, and every action
+    they run on a Dataset built over it still scans parquet."""
+    agg = _minhash_doc_agg(spark, sf_dir)
+    return (
+        _candidate_overlap(_lsh_candidates(agg), agg)
+        .filter(F.col("ni") / F.col("nu") >= JACCARD_THRESHOLD)
+        .select("doc_a", "doc_b", F.expr("(10000 * ni) div nu").alias("jaccard_bp"))
+    )
+
+
 def _minhash_pairs_unsorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """:func:`dedup_minhash_lsh` WITHOUT the output sort — the form for
-    graph consumers (connected components, PageRank, LPA, degree stats,
-    modularity, PPR, incremental CC) that immediately re-shuffle or
-    checkpoint the pair set by their own keys: materializing a global
-    ORDER BY into the consumer's checkpoint costs a range-sampling pass
-    plus a sort exchange per consumer for nothing (guide §2.4 — r11
-    optimization round). The registered query's own plan is unchanged
-    (same body, ``sort_output=True``)."""
-    return _minhash_lsh_impl(spark, sf_dir, sort_output=False)
+    graph consumers (PageRank, LPA, degree stats, modularity, PPR,
+    incremental CC) that immediately re-shuffle or checkpoint the pair
+    set by their own keys: materializing a global ORDER BY into the
+    consumer's checkpoint costs a range-sampling pass plus a sort
+    exchange per consumer for nothing (guide §2.4 — r11 optimization
+    round). Eagerly checkpointed; ``release_result`` drops it."""
+    return local_checkpoint(_minhash_pairs_plan(spark, sf_dir).select("doc_a", "doc_b", "jaccard_bp"))
 
 
 @register("dedup_minhash_lsh", DEDUP_MINHASH_ORACLE, tags=("llm", "dedup", "lsh"))
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fuzzy dedup: MinHash-LSH candidate pairs + exact-Jaccard verification.
 
-    Pipeline: shingle rows -> {N_HASHES} minhashes -> {N_BANDS} band keys ->
-    self-join on (band, band_key) -> exact Jaccard on candidate pairs via
-    shingle co-occurrence counting. The band join is the only shuffle over
-    full data; candidates are a tiny fraction of n^2.
+    Pipeline: shingle rows -> ONE per-document aggregate ({N_HASHES}
+    minhashes, shingle count n, hashed-shingle list hs) -> {N_BANDS} band
+    keys -> self-join on (band, band_key) -> distinct candidates joined
+    back to the aggregate, exact Jaccard from the two hs lists. The band
+    join is the only shuffle over full data; candidates are a tiny
+    fraction of n^2.
 
-    Persist: the exploded, HASHED (doc_id, h) rows are referenced by the
-    signature build, the doc-size agg, AND both sides of the intersection
-    join — without persist the regex/shingle subtree recomputes 4x. At
-    100 TB this persist is the standard LSH-pipeline checkpoint; hashing
-    before the persist keeps it at 16 bytes/row (measured vs string rows:
-    smaller cache and long-key instead of string-key shuffles). The cache is
-    released before returning (_eager_release): only the output-sized pair
-    set survives the call.
+    Persist: nothing. The shingle rows feed only the per-document
+    aggregate (no persisted row frame, no count job, no per-pair
+    re-aggregation); the pair plan (:func:`_minhash_pairs_plan`) is lazy
+    and memoized per session, and the only storage this call creates is
+    the eager checkpoint of its sorted output, dropped by
+    ``release_result``.
     """
-    return _minhash_lsh_impl(spark, sf_dir, sort_output=True)
-
-
-def _minhash_lsh_impl(spark: SparkSession, sf_dir: str, *, sort_output: bool) -> DataFrame:
-    rows = hashed_shingle_rows_df(spark, sf_dir).persist()
-    # Eager materialization: downstream stages (signature, sizes, both
-    # intersection probes) are independent and otherwise race to compute the
-    # uncached subtree concurrently (observed as duplicate rdd blocks).
-    rows.count()
-    sig = minhash_signature_df(rows)
-    bands = _band_df(sig)
-    cand = (
-        bands.alias("a")
-        # shuffle_hash hint (r11 optimization round): the default broadcast
-        # build re-ran the signature aggregate for the build side; with both
-        # sides shuffling on (band, band_key) over identical children,
-        # ReuseExchange evaluates the signature pipeline once.
-        .join(bands.alias("b").hint("shuffle_hash"), ["band", "band_key"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sizes = rows.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    # Intersection size by co-occurrence: candidate pairs joined into the
-    # row stream and counted per pair. No broadcast pin — cand scales with
-    # the corpus dup rate, so AQE picks broadcast vs shuffle at runtime
-    # (at fixture scale it broadcasts; at 100 TB it may not fit).
-    inter = (
-        cand
-        .join(rows.select(F.col("doc_id").alias("doc_a"), "h"), "doc_a")
-        .join(rows.select(F.col("doc_id").alias("doc_b"), "h"), ["doc_b", "h"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("ni"))
-    )
-    result = (
-        inter.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")), "doc_b")
-        .withColumn("nu", F.col("na") + F.col("nb") - F.col("ni"))
-        .filter(F.col("ni") / F.col("nu") >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.expr("(10000 * ni) div nu").alias("jaccard_bp"))
-    )
-    if sort_output:
-        result = result.orderBy("doc_a", "doc_b")
-    return _eager_release(result, rows)
+    return local_checkpoint(_minhash_pairs_plan(spark, sf_dir).orderBy("doc_a", "doc_b"))
 
 
 # ---------------------------------------------------------------------------
@@ -755,46 +814,18 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     verification join prices as est-vs-true error), mirroring how
     sim_recall_eval gates the ANN indexes.
 
-    Scale shape: identical pipeline skeleton to dedup_minhash_lsh (ONE
-    persisted 16-byte/row hashed-shingle frame feeds signatures, sizes and
-    the intersection counts; band-bucket equi-join candidates, never
-    all-pairs). The agreement count is a single codegen'd projection over
-    the two joined WIDE signature rows (h0..h{N_HASHES - 1} columns) — no
-    explode, no per-hash shuffle."""
-    rows = hashed_shingle_rows_df(spark, sf_dir).persist()
-    rows.count()
-    sig = minhash_signature_df(rows)
-    bands = _band_df(sig)
-    cand = (
-        bands.alias("a")
-        # shuffle_hash hint (r11 optimization round): the default broadcast
-        # build re-ran the signature aggregate for the build side; with both
-        # sides shuffling on (band, band_key) over identical children,
-        # ReuseExchange evaluates the signature pipeline once.
-        .join(bands.alias("b").hint("shuffle_hash"), ["band", "band_key"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sizes = rows.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    inter = (
-        cand
-        .join(rows.select(F.col("doc_id").alias("doc_a"), "h"), "doc_a")
-        .join(rows.select(F.col("doc_id").alias("doc_b"), "h"), ["doc_b", "h"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("ni"))
-    )
-    sa = sig.select(F.col("doc_id").alias("doc_a"), *[F.col(f"h{i}").alias(f"a{i}") for i in range(N_HASHES)])
-    sb = sig.select(F.col("doc_id").alias("doc_b"), *[F.col(f"h{i}").alias(f"b{i}") for i in range(N_HASHES)])
-    n_agree = sum(F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0) for i in range(N_HASHES))
-    agree = (
-        cand.join(sa, "doc_a").join(sb, "doc_b").select("doc_a", "doc_b", n_agree.alias("n_agree"))
-    )
-    result = (
-        inter.join(agree, ["doc_a", "doc_b"])
-        .join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")), "doc_b")
-        .withColumn("nu", F.col("na") + F.col("nb") - F.col("ni"))
+    Scale shape: the pair plan of dedup_minhash_lsh without its
+    threshold — the same one per-document aggregate feeds the band-join
+    candidates and the join back, which now also carries both signatures
+    (h0..h{N_HASHES - 1} columns). The agreement count is a single
+    codegen'd projection over the two joined WIDE signature rows — no
+    explode, no per-hash shuffle. Nothing is persisted."""
+    agg = _minhash_doc_agg(spark, sf_dir)
+    hs = [f"h{i}" for i in range(N_HASHES)]
+    n_agree = sum(F.when(F.col(f"{h}_a") == F.col(f"{h}_b"), 1).otherwise(0) for h in hs)
+    return (
+        _candidate_overlap(_lsh_candidates(agg), agg, *hs)
+        .withColumn("n_agree", n_agree)
         .select(
             "doc_a", "doc_b",
             F.expr(f"(10000 * n_agree) div {N_HASHES}").alias("est_bp"),
@@ -803,7 +834,6 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_a", "doc_b")
     )
-    return _eager_release(result, rows)
 
 
 # SimHash parameters: 60-bit signature (15 hex chars of md5 -> always-positive
@@ -1170,6 +1200,11 @@ def connected_components(pairs: DataFrame, max_rounds: int = 25) -> DataFrame:
     until they shrink below the gate. The result is identical: the star
     rounds preserve every node and every component, and min-id labels
     are the unique answer of any correct algorithm.
+
+    ``pairs`` may be a lazy plan (``dedup_clusters`` passes the memoized
+    MinHash pair plan): the ``edges0`` checkpoint below is then the only
+    materialization of the pair set, and the caller has nothing to
+    release.
     """
     from pyspark.sql import Observation
 
@@ -1301,10 +1336,10 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairwise similarity into per-document keep/drop decisions. The oracle
     expresses the closure as a recursive CTE — the "iterative algorithm the
     engine can still verify" case."""
-    mh = _minhash_pairs_unsorted(spark, sf_dir)
-    out = connected_components(mh.select("doc_a", "doc_b"))
-    release_result(mh)  # pair set consumed into the CC edge checkpoint
-    return out.orderBy("doc")
+    # The lazy pair plan goes straight in: the edges0 checkpoint inside
+    # connected_components is the only materialization of the pair set.
+    pairs = _minhash_pairs_plan(spark, sf_dir).select("doc_a", "doc_b")
+    return connected_components(pairs).orderBy("doc")
 
 
 DEDUP_SIMHASH_CLUSTERS_ORACLE = _cc_oracle_sql(
@@ -5018,7 +5053,10 @@ def dedup_cross_split_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaced by a train-side x val-side band join (strictly smaller), and
     the val side is ~10% of the corpus, so candidate generation is
     CHEAPER than full dedup; the per-val rollup is bounded by confirmed
-    matches."""
+    matches. It still runs the old persisted-rows skeleton (persist +
+    count + sizes + two row joins) that dedup_minhash_lsh replaced by one
+    per-document aggregate (:func:`_minhash_doc_agg`,
+    :func:`_candidate_overlap`); moving it over is open."""
     rows = hashed_shingle_rows_df(spark, sf_dir).persist()
     rows.count()
     split = F.when(

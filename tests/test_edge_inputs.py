@@ -97,6 +97,65 @@ def test_dedup_family_on_identical_mirrors(spark, tmp_path, fresh_tables):
     assert len(kept) == 1 and kept[0]["doc_id"] == 0
 
 
+# Two distinct 3-word shingles whose 32-bit base hashes collide
+# (substring(md5(s), 1, 8) = '46f22ca4' for both), found by an offline
+# birthday search over ~1.3e5 random lowercase 3-word shingles.
+_COLLIDING_SHINGLES = ("tepen wsu gcinpa", "nezewi uorht rnmtr")
+
+
+def test_minhash_exact_under_shingle_hash_collision(spark, tmp_path, fresh_tables, monkeypatch):
+    """The oracle keeps a document's colliding 32-bit shingle hashes as a
+    multiset: n counts both, and the intersection is sum ca(h) * cb(h).
+    Doc 1 holds both colliding shingles, doc 2 is its near-duplicate with
+    only one of them, doc 3 an exact copy of doc 1 — so the pair plan's
+    per-value product branch (not array_intersect) prices every pair, and
+    the pair set and calibration audit must still equal their oracles."""
+    import hashlib
+
+    from pyspark.sql import functions as F
+
+    from sol_spark import oracle
+    from sol_spark.operators import dedup
+
+    s1, s2 = _COLLIDING_SHINGLES
+    assert s1 != s2
+    assert hashlib.md5(s1.encode()).hexdigest()[:8] == hashlib.md5(s2.encode()).hexdigest()[:8]
+    head = " ".join(f"alpha{i}" for i in range(20))
+    mid = " ".join(f"beta{i}" for i in range(10))
+    tail = " ".join(f"gamma{i}" for i in range(10))
+    both = f"{head} {s1} {mid} {s2} {tail}"
+    one = f"{head} {s1} {mid} other three words {tail}"
+    _write_docs(
+        tmp_path,
+        [
+            (1, both, "en", "web", len(both)),
+            (2, one, "en", "web", len(one)),
+            (3, both, "en", "web", len(both)),
+            (4, "an unrelated short note about nothing much", "en", "web", 42),
+        ],
+    )
+    sf = str(tmp_path)
+    # The fixture dir holds only documents; the oracle needs no other table.
+    monkeypatch.setattr(oracle, "TABLE_NAMES", ("documents",))
+    agg = dedup._minhash_doc_agg(spark, sf)
+    sizes = {
+        r["doc_id"]: (r["n"], r["nd"])
+        for r in agg.select("doc_id", "n", F.size(F.array_distinct("hs")).alias("nd")).collect()
+    }
+    assert sizes[1][0] == sizes[1][1] + 1 and sizes[3] == sizes[1]
+    assert sizes[2][0] == sizes[2][1]
+    for fn, sql in (
+        (dedup.dedup_minhash_lsh, dedup.DEDUP_MINHASH_ORACLE),
+        (dedup.dedup_minhash_calibration, dedup.MINHASH_CALIBRATION_ORACLE),
+    ):
+        df = fn(spark, sf)
+        pairs = {(r["doc_a"], r["doc_b"]) for r in df.collect()}
+        assert {(1, 2), (1, 3), (2, 3)} <= pairs, (fn.__name__, pairs)
+        ok, msg = oracle.compare(df, sql, sf, exact=True)
+        dedup.release_result(df)
+        assert ok, f"{fn.__name__}: {msg}"
+
+
 def test_similarity_on_empty_embeddings(spark, tmp_path, fresh_tables):
     from sol_spark.operators.similarity import sim_range_search, sim_topk_exact
 

@@ -49,8 +49,9 @@ def union_find(edges, nodes):
 
 
 def test_minhash_retains_only_result(spark, sf_dir):
-    """The 16-byte/row hashed-shingle cache (the big intermediate) must not
-    survive the call: after release_result, storage returns to baseline."""
+    """The pair plan persists nothing, so the only storage the call leaves
+    is its own result checkpoint: after release_result, storage returns
+    to baseline."""
     baseline = _n_persistent(spark)
     df = dedup_minhash_lsh(spark, sf_dir)
     df.count()
@@ -60,20 +61,44 @@ def test_minhash_retains_only_result(spark, sf_dir):
     assert _n_persistent(spark) <= baseline
 
 
+def _leaf_classes(df) -> set[str]:
+    """Leaf node classes of the analyzed plan and of its cache-substituted
+    form (where a persisted frame shows up as InMemoryRelation)."""
+    qe = df._jdf.queryExecution()
+    names = set()
+    for plan in (qe.analyzed(), qe.withCachedData()):
+        leaves = plan.collectLeaves()
+        names |= {leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())}
+    return names
+
+
 def test_clusters_bounded_storage(spark, sf_dir):
     """dedup_clusters runs an iterative loop — per-round checkpoints are
     released as they are superseded (r1: one persist per round, never
-    freed), leaving only the result block."""
+    freed), leaving only the result block. Its MinHash pair plan is
+    memoized as a PLAN, never as a result: the memo holds no cached or
+    checkpointed leaf, and every call runs its own jobs from parquet."""
+    plan = dedup._minhash_pairs_plan(spark, sf_dir)
+    assert plan is dedup._minhash_pairs_plan(spark, sf_dir)
+    assert not _leaf_classes(plan) & {"InMemoryRelation", "LogicalRDD"}
+    sc = spark.sparkContext
     baseline = _n_persistent(spark)
-    df = dedup_clusters(spark, sf_dir)
-    n1 = df.count()
-    assert _n_persistent(spark) <= baseline + 1
-    release_result(df)
-    # Second run reproduces the result from scratch with no storage growth.
-    df2 = dedup_clusters(spark, sf_dir)
-    assert df2.count() == n1
-    release_result(df2)
-    assert _n_persistent(spark) <= baseline
+    results = []
+    for i in range(2):
+        # Second run reproduces the result from scratch with no storage growth.
+        group = f"test_clusters_bounded_storage-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            df = dedup_clusters(spark, sf_dir)
+            results.append(sorted(df.collect()))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 1
+        assert _n_persistent(spark) <= baseline + 1
+        release_result(df)
+        assert _n_persistent(spark) <= baseline
+    assert results[0] and results[0] == results[1]
 
 
 def test_clusters_bounded_storage_distributed(spark, sf_dir, distributed_loop):

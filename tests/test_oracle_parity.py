@@ -56,3 +56,39 @@ LOCAL_FINISH_QUERIES = (
 def test_query_matches_oracle_distributed_loop(name: str, spark, sf_dir: str, distributed_loop) -> None:
     ok, msg = compare(SPECS[name].fn(spark, sf_dir), SPECS[name].oracle, sf_dir, exact=True)
     assert ok, f"{name}: {msg}"
+
+
+# Every registered query whose builder reaches the MinHash pair plan
+# (_minhash_pairs_plan, or the per-document aggregate it is built from),
+# found by running every builder with the two functions wrapped. Strict
+# here at the default local-finish gate; the members that reach connected
+# components are also in LOCAL_FINISH_QUERIES, whose gate-0 twin above
+# runs them strict through the distributed rounds (the gate changes
+# nothing for the other members).
+MINHASH_PAIR_QUERIES = (
+    "dedup_cc_incremental",
+    "dedup_cluster_size_hist",
+    "dedup_clusters",
+    "dedup_ensemble_clusters",
+    "dedup_keep_best_quality",
+    "dedup_keep_list",
+    "dedup_method_overlap",
+    "dedup_minhash_calibration",
+    "dedup_minhash_lsh",
+    "dedup_pagerank",
+    "dedup_rand_index",
+    "dedup_rate_by_source",
+    "dedup_representatives",
+    "dedup_sketch_pr",
+    "graph_conductance",
+    "graph_degree_stats",
+    "graph_label_propagation",
+    "graph_modularity",
+    "graph_ppr",
+)
+
+
+@pytest.mark.parametrize("name", MINHASH_PAIR_QUERIES)
+def test_minhash_pair_query_matches_oracle_strict(name: str, spark, sf_dir: str) -> None:
+    ok, msg = compare(SPECS[name].fn(spark, sf_dir), SPECS[name].oracle, sf_dir, exact=True)
+    assert ok, f"{name}: {msg}"
