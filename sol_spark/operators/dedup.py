@@ -742,17 +742,6 @@ def _minhash_pairs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_pairs_unsorted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """:func:`dedup_minhash_lsh` WITHOUT the output sort — the form for
-    graph consumers (PageRank, LPA, degree stats, modularity, PPR,
-    incremental CC) that immediately re-shuffle or checkpoint the pair
-    set by their own keys: materializing a global ORDER BY into the
-    consumer's checkpoint costs a range-sampling pass plus a sort
-    exchange per consumer for nothing (guide §2.4 — r11 optimization
-    round). Eagerly checkpointed; ``release_result`` drops it."""
-    return local_checkpoint(_minhash_pairs_plan(spark, sf_dir).select("doc_a", "doc_b", "jaccard_bp"))
-
-
 @register("dedup_minhash_lsh", DEDUP_MINHASH_ORACLE, tags=("llm", "dedup", "lsh"))
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fuzzy dedup: MinHash-LSH candidate pairs + exact-Jaccard verification.
@@ -959,8 +948,9 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("hamming") <= HAMMING_MAX)
         # No global sort: the pair SET is the result (the oracle compare is
         # order-insensitive, and downstream consumers — the CC labeler —
-        # shuffle by key anyway); sorting the 1.57 M sf0.1 pairs was the
-        # single largest avoidable stage in the r1 bench profile.
+        # shuffle by key anyway); sorting the sf0.1 pair set (271,530
+        # pairs) was the single largest avoidable stage in the r1 bench
+        # profile.
         .distinct()
     )
 
@@ -1350,11 +1340,12 @@ DEDUP_SIMHASH_CLUSTERS_ORACLE = _cc_oracle_sql(
 @register("dedup_simhash_clusters", DEDUP_SIMHASH_CLUSTERS_ORACLE, tags=("llm", "dedup", "simhash", "iterative"))
 def dedup_simhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production form of SimHash dedup: pair output of dedup_simhash is
-    quadratic in dup-cluster size (1.57 M pairs at sf0.1 — the r1 scale
-    caveat), so the operator a 100 TB pipeline actually runs reduces pairs
-    to per-document cluster labels: output is one row per clustered doc,
-    linear in corpus size. The pairwise query stays registered for the
-    oracle; this is the keep/drop decision table."""
+    quadratic in dup-cluster size (271,530 pairs over 2,799 documents at
+    sf0.1, 2,932 pairs at sf0.01 — the r1 scale caveat), so the operator
+    a 100 TB pipeline actually runs reduces pairs to per-document cluster
+    labels: output is one row per clustered doc, linear in corpus size.
+    The pairwise query stays registered for the oracle; this is the
+    keep/drop decision table."""
     pairs = dedup_simhash(spark, sf_dir).select("doc_a", "doc_b")
     return connected_components(pairs).orderBy("doc")
 
@@ -1501,9 +1492,12 @@ def dedup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     production pipeline often keeps the most CENTRAL duplicate (the best
     representative of the dup neighborhood) — this operator supplies that
     score; joining it against dedup_clusters picks argmax(rank) per cluster."""
-    mh = _minhash_pairs_unsorted(spark, sf_dir)
-    out = pagerank(mh.select("doc_a", "doc_b"), iters=PAGERANK_ITERS)
-    release_result(mh)
+    # pagerank() reads its input four times in the one job that builds its
+    # edge table; over the lazy pair plan the query measured ~0.4 s slower
+    # at sf0.1 (4 cores) than over this checkpoint.
+    pairs = local_checkpoint(_minhash_pairs_plan(spark, sf_dir).select("doc_a", "doc_b"))
+    out = pagerank(pairs, iters=PAGERANK_ITERS)
+    release_result(pairs)
     return out
 
 
@@ -1967,16 +1961,14 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     on node id, reusable across rounds) + one (node, label) count + one
     per-node argmax window; production runs to stability with
     localCheckpoint every few rounds exactly like connected_components."""
-    mh = _minhash_pairs_unsorted(spark, sf_dir)
-    pairs = mh.select("doc_a", "doc_b")
-    edges = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).unionAll(
-        pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
+    pairs = _minhash_pairs_plan(spark, sf_dir).select("doc_a", "doc_b")
+    # The edge set is the only checkpoint: the rounds read it, never the
+    # lazy pair plan.
+    edges = local_checkpoint(
+        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).unionAll(
+            pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
+        )
     )
-    # Materialize the edge set BEFORE releasing the minhash pipeline's
-    # persisted working frames (same truncation discipline as
-    # connected_components — the returned plan must not reach back through
-    # the released pair pipeline).
-    edges = local_checkpoint(edges)
     labels0 = edges.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -1998,7 +1990,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("node", F.col("p.label").alias("label"))
         )
 
-    out = iterate(
+    return iterate(
         labels0,
         lpa_round,
         lambda labels: labels.select(
@@ -2008,8 +2000,6 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         checkpoint_rounds=False,  # fixed unroll, bounded plan depth
         release=(edges,),
     )
-    release_result(mh)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -2060,16 +2050,14 @@ def dedup_method_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources = {
         "containment": _containment_pairs_unsorted(spark, sf_dir),
         "jaccard": _ngram_jaccard_pairs_unsorted(spark, sf_dir),
-        "minhash": _minhash_pairs_unsorted(spark, sf_dir),
+        "minhash": _minhash_pairs_plan(spark, sf_dir),
         "simhash": dedup_simhash(spark, sf_dir),
     }
-    # Materialize each pair set, then release its pipeline's persisted
-    # working frames — the overlap joins must not reach back through
-    # released storage (the connected_components truncation discipline).
-    pair_sets = {}
-    for m, df in sources.items():
-        pair_sets[m] = df.select("doc_a", "doc_b").localCheckpoint(eager=True)
-        release_result(df)
+    # The four sources are lazy plans; each pair set is checkpointed once
+    # because its count and up to three overlap joins read it.
+    pair_sets = {
+        m: df.select("doc_a", "doc_b").localCheckpoint(eager=True) for m, df in sources.items()
+    }
     names = sorted(pair_sets)
     counts = {m: df.count() for m, df in pair_sets.items()}
     parts = []
@@ -2089,9 +2077,10 @@ def dedup_method_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = parts[0]
     for p in parts[1:]:
         u = u.unionAll(p)
-    # The four pair checkpoints are the result plan's leaves; the caller's
-    # release_result(out) frees them.
-    return u.orderBy("method_a", "method_b")
+    out = local_checkpoint(u.orderBy("method_a", "method_b"))
+    for df in pair_sets.values():
+        release_result(df)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -2265,9 +2254,7 @@ def graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny histogram frame."""
     from pyspark.sql import Window as W
 
-    mh = _minhash_pairs_unsorted(spark, sf_dir)
-    pairs = mh.select("doc_a", "doc_b").localCheckpoint(eager=True)
-    release_result(mh)
+    pairs = _minhash_pairs_plan(spark, sf_dir).select("doc_a", "doc_b").localCheckpoint(eager=True)
     deg = (
         pairs.select(F.col("doc_a").alias("node"))
         .unionAll(pairs.select(F.col("doc_b").alias("node")))
@@ -2448,10 +2435,8 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc, community) map twice on the node key — the same shuffle the CC
     labeler already does; m is a bounded driver scalar (like pagerank's
     node count). Nothing here exceeds O(|E|) shuffled rows."""
-    lpa = local_checkpoint(graph_label_propagation(spark, sf_dir))
-    mh = _minhash_pairs_unsorted(spark, sf_dir)
-    pairs = local_checkpoint(mh.select("doc_a", "doc_b"))
-    release_result(mh)
+    lpa = graph_label_propagation(spark, sf_dir)  # the loop's result checkpoint
+    pairs = local_checkpoint(_minhash_pairs_plan(spark, sf_dir).select("doc_a", "doc_b"))
     m = float(pairs.count())
     sym = pairs.select(F.col("doc_a").alias("doc")).unionAll(
         pairs.select(F.col("doc_b").alias("doc"))
@@ -3001,21 +2986,22 @@ def dedup_sketch_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join, see dedup_prefix_filter_join); each sketch pipeline is
     bucketed per its own docstring; the grading itself is four left-semi
     joins on (doc_a, doc_b) pair keys plus count aggregates — no step is
-    ever all-pairs. Pair frames are checkpointed and their pipelines'
-    storage released before grading (the method_overlap discipline)."""
+    ever all-pairs. Each method's pair frame, read by its count and its
+    grading join, is checkpointed once; the pair pipelines behind them
+    are lazy plans that persist nothing."""
     truth = dedup_prefix_filter_join(spark, sf_dir).select("doc_a", "doc_b")
     truth = truth.localCheckpoint(eager=True)
     sources = {
         "containment": _containment_pairs_unsorted(spark, sf_dir),
         "jaccard": _ngram_jaccard_pairs_unsorted(spark, sf_dir),
-        "minhash": _minhash_pairs_unsorted(spark, sf_dir),
+        "minhash": _minhash_pairs_plan(spark, sf_dir),
         "simhash": dedup_simhash(spark, sf_dir),
     }
     n_truth = truth.count()
-    parts = []
+    parts, checkpoints = [], [truth]
     for m in sorted(sources):
         pairs = sources[m].select("doc_a", "doc_b").localCheckpoint(eager=True)
-        release_result(sources[m])
+        checkpoints.append(pairs)
         n_method = pairs.count()
         tp_df = (
             pairs.join(truth, ["doc_a", "doc_b"], "left_semi")
@@ -3037,7 +3023,7 @@ def dedup_sketch_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
     rec = F.when(F.col("n_truth") == 0, F.lit(0)).otherwise(
         F.expr("(10000 * tp) div n_truth")
     )
-    return (
+    out = local_checkpoint(
         u.select(
             "method", "n_truth", "n_method", "tp",
             (F.col("n_method") - F.col("tp")).alias("fp"),
@@ -3047,6 +3033,9 @@ def dedup_sketch_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("method")
     )
+    for df in checkpoints:
+        release_result(df)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -3475,29 +3464,22 @@ def dedup_ensemble_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles never cross — and the shared Kiveris CC with the usual
     checkpoint/release discipline; cluster sizes are one hash agg over
     the label table."""
-    sources = [
-        _minhash_pairs_unsorted(spark, sf_dir),
+    pairs = _minhash_pairs_plan(spark, sf_dir).select("doc_a", "doc_b")
+    for df in (
         dedup_simhash(spark, sf_dir),
         _ngram_jaccard_pairs_unsorted(spark, sf_dir),
         _containment_pairs_unsorted(spark, sf_dir),
-    ]
-    pair_frames = []
-    for df in sources:
-        pair_frames.append(local_checkpoint(df.select("doc_a", "doc_b")))
-        release_result(df)
-    pairs = pair_frames[0]
-    for p in pair_frames[1:]:
-        pairs = pairs.unionByName(p)
-    pairs = local_checkpoint(pairs.distinct())
-    for p in pair_frames:
-        release_result(p)
+    ):
+        pairs = pairs.unionByName(df.select("doc_a", "doc_b"))
+    # The four pair plans are lazy: the edges0 checkpoint inside
+    # connected_components (which drops duplicate pairs) is the only
+    # materialization of their union.
     cc = connected_components(pairs)
     sizes = cc.groupBy("cluster").agg(F.count(F.lit(1)).alias("cluster_size"))
     out = local_checkpoint(
         cc.join(sizes, "cluster").select("doc", "cluster", "cluster_size").orderBy("doc")
     )
     release_result(cc)
-    release_result(pairs)
     return out
 
 
@@ -3674,9 +3656,7 @@ def graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     |V|-row join per round, no collect. Seed selection is a TakeOrdered
     over the node set, never a global sort. Fixed {PPR_ITERS}-round budget,
     bounded plan depth (checkpointing unneeded, as in pagerank)."""
-    mh = _minhash_pairs_unsorted(spark, sf_dir)
-    pairs = local_checkpoint(mh.select("doc_a", "doc_b"))
-    release_result(mh)
+    pairs = local_checkpoint(_minhash_pairs_plan(spark, sf_dir).select("doc_a", "doc_b"))
     sym = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")).union(
         pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
     )
@@ -3869,9 +3849,7 @@ def dedup_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     late edges and the labels they touch. The final label attach is one
     left join of the base labeling against the (tiny) quotient relabel
     map."""
-    mh = _minhash_pairs_unsorted(spark, sf_dir)
-    pairs = local_checkpoint(mh.select("doc_a", "doc_b"))
-    release_result(mh)
+    pairs = local_checkpoint(_minhash_pairs_plan(spark, sf_dir).select("doc_a", "doc_b"))
     is_late = (F.col("doc_a") + F.col("doc_b")) % CC_INC_SPLIT_MOD == 0
     base = pairs.where(~is_late)
     late = pairs.where(is_late)
@@ -4202,7 +4180,7 @@ def dedup_soft_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     the self-join; without persisting it the whole shingle-explode +
     signature pipeline runs twice (measured ~2x wall). The persist is
     band-frame-sized, not corpus-sized, and is released before return
-    (the same cache-lifecycle contract as dedup_minhash_lsh)."""
+    (:func:`_eager_release`)."""
     bands = _band_df(minhash_signature_df(hashed_shingle_rows_df(spark, sf_dir))).persist()
     nbrs = (
         bands.join(
@@ -4513,20 +4491,14 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     crawl-internal repetition (diagonal mass) — and which source pairs to
     prioritize for cross-source dedup passes.
 
-    Scale shape: the band self-join from the LSH pipeline (never
-    all-pairs), then two joins of the candidate pairs against the
+    Scale shape: the LSH pipeline's candidate pairs
+    (:func:`_lsh_candidates`, never all-pairs), then two joins against the
     (doc_id, source) projection — both sides prunable to two columns at
     the scan — and a K x K hash-agg whose output is bounded by source
-    cardinality, not corpus size."""
-    bands = _band_df(minhash_signature_df(hashed_shingle_rows_df(spark, sf_dir))).persist()
-    cand = (
-        bands.join(bands.withColumnsRenamed({"doc_id": "doc_b"}), ["band", "band_key"])
-        .filter(F.col("doc_id") < F.col("doc_b"))
-        .select(F.col("doc_id").alias("doc_a"), "doc_b")
-        .distinct()
-    )
+    cardinality, not corpus size. Nothing is persisted."""
+    cand = _lsh_candidates(_minhash_doc_agg(spark, sf_dir))
     src = load_tables(spark, sf_dir)["documents"].select("doc_id", "source")
-    result = (
+    return (
         cand.join(src.withColumnsRenamed({"doc_id": "doc_a", "source": "sa"}), "doc_a")
         .join(src.withColumnsRenamed({"doc_id": "doc_b", "source": "sb"}), "doc_b")
         .select(
@@ -4541,7 +4513,6 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source_a", "source_b")
     )
-    return _eager_release(result, bands)
 
 
 # ---------------------------------------------------------------------------
@@ -4690,10 +4661,8 @@ def graph_conductance(spark: SparkSession, sf_dir: str) -> DataFrame:
     modularity op does (O(|E|) shuffled rows); volumes/cuts are one
     hash-agg; the complement volume needs only the 1-row total crossed
     back. All integers end to end."""
-    lpa = local_checkpoint(graph_label_propagation(spark, sf_dir))
-    mh = _minhash_pairs_unsorted(spark, sf_dir)
-    pairs = local_checkpoint(mh.select("doc_a", "doc_b"))
-    release_result(mh)
+    lpa = graph_label_propagation(spark, sf_dir)  # the loop's result checkpoint
+    pairs = local_checkpoint(_minhash_pairs_plan(spark, sf_dir).select("doc_a", "doc_b"))
     sym = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).unionAll(
         pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
     )
@@ -5049,46 +5018,39 @@ def dedup_cross_split_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup tier between them, using the same split rule as
     text_train_val_split so the three audits describe one split.
 
-    Scale shape: identical to dedup_minhash_lsh — the band self-join is
-    replaced by a train-side x val-side band join (strictly smaller), and
-    the val side is ~10% of the corpus, so candidate generation is
-    CHEAPER than full dedup; the per-val rollup is bounded by confirmed
-    matches. It still runs the old persisted-rows skeleton (persist +
-    count + sizes + two row joins) that dedup_minhash_lsh replaced by one
-    per-document aggregate (:func:`_minhash_doc_agg`,
-    :func:`_candidate_overlap`); moving it over is open."""
-    rows = hashed_shingle_rows_df(spark, sf_dir).persist()
-    rows.count()
+    Scale shape: the pair plan of dedup_minhash_lsh with the band
+    self-join replaced by a train-side x val-side band join (strictly
+    smaller: the val side is ~10% of the corpus, so candidate generation
+    is CHEAPER than full dedup). One per-document aggregate
+    (:func:`_minhash_doc_agg`) feeds the band join and the exact-Jaccard
+    join back (:func:`_candidate_overlap`, exact on multisets for any
+    candidate pair, ordered or not); the per-val rollup is bounded by
+    confirmed matches. Nothing is persisted."""
+    agg = _minhash_doc_agg(spark, sf_dir)
     split = F.when(
         F.expr("CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 6), 16, 10) AS BIGINT) % 100") < 10,
         "val",
     ).otherwise("train")
-    bands = _band_df(minhash_signature_df(rows)).withColumn("split", split)
+    bands = _band_df(agg).withColumn("split", split)
     cand = (
         bands.filter(F.col("split") == "train").alias("t")
         .join(bands.filter(F.col("split") == "val").alias("v"), ["band", "band_key"])
-        .select(F.col("t.doc_id").alias("train_doc"), F.col("v.doc_id").alias("val_doc"))
+        .select(F.col("t.doc_id").alias("doc_a"), F.col("v.doc_id").alias("doc_b"))
         .distinct()
     )
-    sizes = rows.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     confirmed = (
-        cand.join(rows.select(F.col("doc_id").alias("train_doc"), "h"), "train_doc")
-        .join(rows.select(F.col("doc_id").alias("val_doc"), "h"), ["val_doc", "h"])
-        .groupBy("val_doc", "train_doc")
-        .agg(F.count(F.lit(1)).alias("ni"))
-        .join(sizes.select(F.col("doc_id").alias("train_doc"), F.col("n").alias("nt")), "train_doc")
-        .join(sizes.select(F.col("doc_id").alias("val_doc"), F.col("n").alias("nv")), "val_doc")
-        .filter(F.col("ni") / (F.col("nt") + F.col("nv") - F.col("ni")) >= JACCARD_THRESHOLD)
+        _candidate_overlap(cand, agg)
+        .filter(F.col("ni") / F.col("nu") >= JACCARD_THRESHOLD)
         .select(
-            "val_doc", "train_doc",
-            F.expr("(10000 * ni) div (nt + nv - ni)").alias("jaccard_bp"),
+            F.col("doc_b").alias("val_doc"), F.col("doc_a").alias("train_doc"),
+            F.expr("(10000 * ni) div nu").alias("jaccard_bp"),
         )
     )
     best = confirmed.groupBy("val_doc").agg(
         F.max("jaccard_bp").alias("best_jaccard_bp"),
         F.count(F.lit(1)).cast("long").alias("n_train_matches"),
     )
-    out = (
+    return (
         best.join(
             confirmed.select("val_doc", F.col("jaccard_bp").alias("best_jaccard_bp"), "train_doc"),
             ["val_doc", "best_jaccard_bp"],
@@ -5098,9 +5060,6 @@ def dedup_cross_split_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("val_doc", "n_train_matches", "best_jaccard_bp", "best_train_doc")
         .orderBy("val_doc")
     )
-    out = local_checkpoint(out)
-    rows.unpersist()
-    return out
 
 
 # ---------------------------------------------------------------------------

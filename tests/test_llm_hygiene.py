@@ -15,16 +15,17 @@ from __future__ import annotations
 import re
 
 import numpy as np
+import pytest
 
 from sol_spark.operators import dedup
 from sol_spark.operators.dedup import (
     boruvka_forest,
     connected_components,
     dedup_clusters,
-    dedup_minhash_lsh,
     release_result,
     union_find_labels,
 )
+from sol_spark.registry import all_queries
 
 
 def _n_persistent(spark) -> int:
@@ -48,17 +49,41 @@ def union_find(edges, nodes):
     return {n: find(n) for n in nodes}
 
 
-def test_minhash_retains_only_result(spark, sf_dir):
-    """The pair plan persists nothing, so the only storage the call leaves
-    is its own result checkpoint: after release_result, storage returns
-    to baseline."""
+# The queries that read the MinHash pair relation through the shared lazy
+# helpers (_minhash_pairs_plan, or _minhash_doc_agg with _lsh_candidates or
+# _candidate_overlap) in place of a private persisted copy.
+MINHASH_CONSUMERS = (
+    "dedup_cc_incremental",
+    "dedup_cross_source_matrix",
+    "dedup_cross_split_decontam",
+    "dedup_ensemble_clusters",
+    "dedup_method_overlap",
+    "dedup_pagerank",
+    "dedup_sketch_pr",
+    "graph_conductance",
+    "graph_degree_stats",
+    "graph_label_propagation",
+    "graph_modularity",
+    "graph_ppr",
+)
+
+
+@pytest.mark.parametrize("name", MINHASH_CONSUMERS)
+def test_minhash_consumer_retains_only_result(spark, sf_dir, name):
+    """The pair plan persists nothing, so the only storage a consumer's
+    call leaves is its own result checkpoint: after release_result,
+    storage returns to baseline."""
     baseline = _n_persistent(spark)
-    df = dedup_minhash_lsh(spark, sf_dir)
+    df = all_queries()[name].fn(spark, sf_dir)
     df.count()
     # At most the result's own checkpoint outlives the call.
     assert _n_persistent(spark) <= baseline + 1
     release_result(df)
     assert _n_persistent(spark) <= baseline
+
+
+def test_minhash_retains_only_result(spark, sf_dir):
+    test_minhash_consumer_retains_only_result(spark, sf_dir, "dedup_minhash_lsh")
 
 
 def _leaf_classes(df) -> set[str]:
@@ -452,7 +477,6 @@ def test_iterate_storage_contract(spark):
     checkpoints are released as superseded, the finalize result is the
     only surviving block, and cleanup runs even when the loop raises on
     non-convergence."""
-    import pytest
     from pyspark.sql import functions as F
 
     from sol_spark.operators.dedup import iterate, local_checkpoint

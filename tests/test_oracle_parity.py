@@ -58,17 +58,20 @@ def test_query_matches_oracle_distributed_loop(name: str, spark, sf_dir: str, di
     assert ok, f"{name}: {msg}"
 
 
-# Every registered query whose builder reaches the MinHash pair plan
-# (_minhash_pairs_plan, or the per-document aggregate it is built from),
-# found by running every builder with the two functions wrapped. Strict
-# here at the default local-finish gate; the members that reach connected
-# components are also in LOCAL_FINISH_QUERIES, whose gate-0 twin above
-# runs them strict through the distributed rounds (the gate changes
-# nothing for the other members).
+# Every registered query whose builder reaches the shared MinHash helpers
+# (_minhash_pairs_plan, the per-document aggregate _minhash_doc_agg, or the
+# band-join candidates _lsh_candidates), found by running every builder
+# with the three functions wrapped. Strict here at the default
+# local-finish gate; the members that reach connected components are also
+# in LOCAL_FINISH_QUERIES, whose gate-0 twin above runs them strict
+# through the distributed rounds (the gate changes nothing for the other
+# members).
 MINHASH_PAIR_QUERIES = (
     "dedup_cc_incremental",
     "dedup_cluster_size_hist",
     "dedup_clusters",
+    "dedup_cross_source_matrix",
+    "dedup_cross_split_decontam",
     "dedup_ensemble_clusters",
     "dedup_keep_best_quality",
     "dedup_keep_list",

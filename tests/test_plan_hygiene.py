@@ -86,7 +86,6 @@ EAGER_BUILD = {
     "dedup_shared_spans",  # checkpoints the capped pairs + anchor frame during build
     "events_rate_limit_sliding",  # checkpoints the grouped-map replay before the sort
     "dedup_cluster_cohesion",
-    "dedup_cross_split_decontam",  # persists the hashed shingle rows during build
     # r8 eager operators: the fastText trainer runs its integer-GD
     # model-sync loop during construction; q67a checkpoints the shared
     # 9-level base; MIS now probes convergence through an Observation on

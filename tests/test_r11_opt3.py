@@ -52,20 +52,19 @@ def test_explode_symmetrization_equals_union(spark, sf_dir):
 
 
 def test_minhash_unsorted_matches_registered(spark, sf_dir):
-    """_minhash_pairs_unsorted == the registered dedup_minhash_lsh modulo
-    row order (same body, sort_output toggled)."""
+    """The unsorted pair plan the graph consumers read == the registered
+    dedup_minhash_lsh modulo row order (same plan, output sort added)."""
     from sol_spark.operators.dedup import (
-        _minhash_pairs_unsorted,
+        _minhash_pairs_plan,
         dedup_minhash_lsh,
         release_result,
     )
 
-    uns = _minhash_pairs_unsorted(spark, sf_dir)
+    uns = _minhash_pairs_plan(spark, sf_dir).select("doc_a", "doc_b", "jaccard_bp")
     reg = dedup_minhash_lsh(spark, sf_dir)
     assert uns.schema == reg.schema
     assert uns.exceptAll(reg).count() == 0
     assert reg.exceptAll(uns).count() == 0
     got = [(r["doc_a"], r["doc_b"]) for r in reg.select("doc_a", "doc_b").collect()]
     assert got == sorted(got)
-    release_result(uns)
     release_result(reg)
