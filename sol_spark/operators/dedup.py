@@ -360,7 +360,8 @@ def local_finish_max_rows(spark: SparkSession) -> int:
     and a graph above the gate never leaves the executors."""
     if LOCAL_FINISH_MAX_ROWS is not None:
         return LOCAL_FINISH_MAX_ROWS
-    mem = spark.sparkContext.getConf().get("spark.driver.memory", "1g")
+    # One key off the live SparkConf: getConf() would copy every entry.
+    mem = spark.sparkContext._conf.get("spark.driver.memory", "1g")
     mb = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsMb(mem)
     return int(mb * 2**20 * LOCAL_FINISH_HEAP_SHARE) // LOCAL_FINISH_EDGE_BYTES
 
@@ -443,12 +444,15 @@ def boruvka_forest(a: np.ndarray, b: np.ndarray, w: np.ndarray, max_rounds: int)
 
 
 def _arrow_frame(spark: SparkSession, schema, columns: list[np.ndarray]) -> DataFrame:
-    """A DataFrame over driver-side arrays, built JVM-side from Arrow
-    batches (no Python worker, no job), with the distributed path's exact
-    schema."""
+    """A one-partition DataFrame over driver-side arrays, built JVM-side
+    from Arrow batches (no Python worker, no job), with the distributed
+    path's exact schema. The rows came to the driver in one collect, so
+    one partition is all they need, and a ``SinglePartition`` child
+    satisfies ``orderBy``: sorting the result plans no range exchange
+    (one job, not a sampling job, a shuffle map and a result job)."""
     import pyarrow as pa
 
-    return spark.createDataFrame(pa.table(dict(zip(schema.names, columns))), schema)
+    return spark.createDataFrame(pa.table(dict(zip(schema.names, columns))), schema).coalesce(1)
 
 
 # MinHash parameters: 12 permutations, 4 bands x 3 rows => LSH similarity
@@ -588,23 +592,34 @@ def minhash_signature_df(rows: DataFrame) -> DataFrame:
 
 def _minhash_doc_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE aggregate per document over the hashed shingle rows: the
-    signature h0..h{N-1}, the shingle-row count ``n`` and ``hs`` =
+    signature h0..h{N-1}, the shingle-row count ``n``, ``hs`` =
     collect_list(h), the document's hashed shingles WITH multiplicity
     (two distinct shingles that collide in 32 bits stay two entries, as
-    in the oracle's ``sh`` CTE). Everything the pair plan needs per
-    document comes from this one frame, so nothing upstream is persisted.
-    Column pruning splits it per consumer: the band side keeps only the
-    signature, the join back only (n, hs), so one action shingles the
-    documents twice (once per pruned aggregate)."""
-    return hashed_shingle_rows_df(spark, sf_dir).groupBy("doc_id").agg(
-        *_minhash_aggs(), F.count(F.lit(1)).alias("n"), F.collect_list("h").alias("hs")
+    in the oracle's ``sh`` CTE), and ``set``, true when ``hs`` is
+    duplicate-free. Everything the pair plan needs per document comes
+    from this one frame, so nothing upstream is persisted. The pair
+    consumers carry what they read of it on the band rows
+    (:func:`_lsh_candidates`) instead of joining back to it, so both
+    sides of the band join read one exchange and one action shingles
+    the documents once."""
+    return (
+        hashed_shingle_rows_df(spark, sf_dir)
+        .groupBy("doc_id")
+        .agg(*_minhash_aggs(), F.count(F.lit(1)).alias("n"), F.collect_list("h").alias("hs"))
+        .withColumn("set", F.size(F.array_distinct("hs")) == F.col("n"))
     )
 
 
-def _band_df(sig: DataFrame) -> DataFrame:
-    """Explode the signature into (doc_id, band, band_key) rows; band_key =
-    the band's row-hash values joined with '|' (plain concat — no need to
-    re-hash for an equi-join key)."""
+# The per-document columns the exact-Jaccard verification
+# (:func:`_candidate_overlap`) reads from both documents of a pair.
+_OVERLAP_COLS = ("n", "hs", "set")
+
+
+def _band_df(sig: DataFrame, *cols: str) -> DataFrame:
+    """Explode the signature into (doc_id, <cols>, band, band_key) rows;
+    band_key = the band's row-hash values joined with '|' (plain concat —
+    no need to re-hash for an equi-join key). ``cols`` of ``sig`` ride
+    along on every band row."""
     band_keys = F.array(
         *[
             F.concat_ws(
@@ -613,24 +628,37 @@ def _band_df(sig: DataFrame) -> DataFrame:
             for b in range(N_BANDS)
         ]
     )
-    return sig.select("doc_id", F.posexplode(band_keys).alias("band", "band_key"))
+    return sig.select("doc_id", *cols, F.posexplode(band_keys).alias("band", "band_key"))
 
 
-def _lsh_candidates(sig: DataFrame) -> DataFrame:
-    """Signature frame -> distinct (doc_a, doc_b) LSH candidate pairs,
-    doc_a < doc_b: the band self-join on (band, band_key), never the
-    O(n^2) cross product."""
-    bands = _band_df(sig)
+def _lsh_candidates(sig: DataFrame, *cols: str, key: str = "doc_id") -> DataFrame:
+    """Signature frame -> LSH candidate rows (doc_a, doc_b, <cols>_a,
+    <cols>_b): the band self-join on (band, band_key), never the O(n^2)
+    cross product, keeping the pairs whose ``key`` is smaller on the a
+    side (``doc_id``: each unordered pair once; a boolean column: false
+    on a, true on b). There is one row per shared band, so a consumer
+    prices the pair from the carried columns and then takes the
+    ``distinct``. ``key`` other than ``doc_id`` must be among ``cols``.
+
+    Both sides are the same band frame shuffled on (band, band_key)
+    under a ``shuffle_hash`` hint, and the pair condition reads both
+    sides, so no filter is pushed into one of them: ReuseExchange
+    evaluates the per-document aggregate once, payload included. The
+    condition also reads ``doc_id`` on both sides (a document never
+    pairs with itself), so both infer the same not-null filter even
+    when a consumer's later join infers one for ``doc_b`` only."""
+    bands = _band_df(sig, *cols)
     return (
         bands.alias("a")
-        # shuffle_hash hint (r11 optimization round): the default broadcast
-        # build re-ran the signature aggregate for the build side; with both
-        # sides shuffling on (band, band_key) over identical children,
-        # ReuseExchange evaluates the signature pipeline once.
         .join(bands.alias("b").hint("shuffle_hash"), ["band", "band_key"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
+        .filter(
+            (F.col(f"a.{key}") < F.col(f"b.{key}")) & (F.col("a.doc_id") != F.col("b.doc_id"))
+        )
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in cols for s in ("a", "b")],
+        )
     )
 
 
@@ -641,33 +669,21 @@ def _lsh_candidates(sig: DataFrame) -> DataFrame:
 _NI_MULTISET = "aggregate(hs_a, 0L, (acc, x) -> acc + size(filter(hs_b, y -> y = x)))"
 
 
-def _candidate_overlap(cand: DataFrame, agg: DataFrame, *cols: str) -> DataFrame:
-    """Candidate pairs joined back to the per-document aggregate ->
+def _candidate_overlap(cand: DataFrame, *cols: str) -> DataFrame:
+    """Candidate rows carrying ``_OVERLAP_COLS`` of both documents ->
     (doc_a, doc_b, ni, nu, <cols suffixed _a/_b>): ``ni`` the exact
     intersection of the two hashed-shingle multisets (the oracle's
     ``inter`` count), ``nu`` = na + nb - ni. ``size(array_intersect)`` is
     exact only for duplicate-free lists, so it serves the pairs whose
-    both documents have ``size(array_distinct(hs)) = n``; a document
-    with a colliding hash takes the per-value product."""
-
-    def side(s: str) -> DataFrame:
-        return agg.select(
-            F.col("doc_id").alias(f"doc_{s}"),
-            F.col("n").alias(f"n_{s}"),
-            F.col("hs").alias(f"hs_{s}"),
-            (F.size(F.array_distinct("hs")) == F.col("n")).alias(f"set_{s}"),
-            *[F.col(c).alias(f"{c}_{s}") for c in cols],
-        )
-
+    both documents have ``set``; a document with a colliding hash takes
+    the per-value product."""
     ni = (
         F.when(F.col("set_a") & F.col("set_b"), F.size(F.array_intersect("hs_a", "hs_b")))
         .otherwise(F.expr(_NI_MULTISET))
         .cast("long")
     )
     return (
-        cand.join(side("a"), "doc_a")
-        .join(side("b"), "doc_b")
-        .withColumn("ni", ni)
+        cand.withColumn("ni", ni)
         .withColumn("nu", F.col("n_a") + F.col("n_b") - F.col("ni"))
         .select(
             "doc_a", "doc_b", "ni", "nu",
@@ -727,18 +743,21 @@ def _minhash_pairs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MinHash pair set as ONE lazy plan that persists nothing:
     unsorted (doc_a, doc_b, jaccard_bp), memoized per (session, sf_dir).
 
-    One aggregate per document (:func:`_minhash_doc_agg`) feeds both the
-    band self-join and, for the distinct candidate pairs only, the join
-    back for (n, hs) that prices the exact Jaccard. There is no persisted
-    shingle frame, no count job and no per-pair re-aggregation, so the
-    plan holds no materialized state and can be memoized: consumers pay
-    plan construction and analysis once per session, and every action
-    they run on a Dataset built over it still scans parquet."""
+    One aggregate per document (:func:`_minhash_doc_agg`) feeds the band
+    self-join, whose rows carry (n, hs, set) of both documents, so the
+    exact Jaccard is priced on the join output, thresholded, and only
+    then made distinct: one shingle scan per action, no join back. There
+    is no persisted shingle frame, no count job and no per-pair
+    re-aggregation, so the plan holds no materialized state and can be
+    memoized: consumers pay plan construction and analysis once per
+    session, and every action they run on a Dataset built over it still
+    scans parquet."""
     agg = _minhash_doc_agg(spark, sf_dir)
     return (
-        _candidate_overlap(_lsh_candidates(agg), agg)
+        _candidate_overlap(_lsh_candidates(agg, *_OVERLAP_COLS))
         .filter(F.col("ni") / F.col("nu") >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b", F.expr("(10000 * ni) div nu").alias("jaccard_bp"))
+        .distinct()
     )
 
 
@@ -748,10 +767,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Pipeline: shingle rows -> ONE per-document aggregate ({N_HASHES}
     minhashes, shingle count n, hashed-shingle list hs) -> {N_BANDS} band
-    keys -> self-join on (band, band_key) -> distinct candidates joined
-    back to the aggregate, exact Jaccard from the two hs lists. The band
-    join is the only shuffle over full data; candidates are a tiny
-    fraction of n^2.
+    rows per document carrying (n, hs) -> self-join on (band, band_key)
+    -> exact Jaccard from the two carried hs lists, threshold, distinct.
+    The band join is the only shuffle over full data (its two sides
+    share one exchange); candidates are a tiny fraction of n^2.
 
     Persist: nothing. The shingle rows feed only the per-document
     aggregate (no persisted row frame, no count job, no per-pair
@@ -804,16 +823,17 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim_recall_eval gates the ANN indexes.
 
     Scale shape: the pair plan of dedup_minhash_lsh without its
-    threshold — the same one per-document aggregate feeds the band-join
-    candidates and the join back, which now also carries both signatures
-    (h0..h{N_HASHES - 1} columns). The agreement count is a single
-    codegen'd projection over the two joined WIDE signature rows — no
-    explode, no per-hash shuffle. Nothing is persisted."""
+    threshold — the same one per-document aggregate feeds the band
+    self-join, whose rows also carry both signatures (h0..h{N_HASHES - 1}
+    columns) next to (n, hs). The agreement count is a single codegen'd
+    projection over the two joined WIDE signature rows — no explode, no
+    per-hash shuffle — and the distinct comes after it. Nothing is
+    persisted."""
     agg = _minhash_doc_agg(spark, sf_dir)
     hs = [f"h{i}" for i in range(N_HASHES)]
     n_agree = sum(F.when(F.col(f"{h}_a") == F.col(f"{h}_b"), 1).otherwise(0) for h in hs)
     return (
-        _candidate_overlap(_lsh_candidates(agg), agg, *hs)
+        _candidate_overlap(_lsh_candidates(agg, *_OVERLAP_COLS, *hs), *hs)
         .withColumn("n_agree", n_agree)
         .select(
             "doc_a", "doc_b",
@@ -821,6 +841,7 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("(10000 * ni) div nu").alias("true_bp"),
             F.expr(f"abs((10000 * n_agree) div {N_HASHES} - (10000 * ni) div nu)").alias("err_bp"),
         )
+        .distinct()
         .orderBy("doc_a", "doc_b")
     )
 
@@ -1197,6 +1218,7 @@ def connected_components(pairs: DataFrame, max_rounds: int = 25) -> DataFrame:
     release.
     """
     from pyspark.sql import Observation
+    from pyspark.sql.types import StructField, StructType
 
     # Canonical directed edges u -> v with u > v (self-loops dropped).
     edges0 = (
@@ -1210,14 +1232,6 @@ def connected_components(pairs: DataFrame, max_rounds: int = 25) -> DataFrame:
     # the round width and feeds the local-finish gate with no count job.
     n_obs = Observation("cc_edges")
     edges0 = local_checkpoint(edges0.observe(n_obs, F.count(F.lit(1)).alias("n")))
-    # Nodes from the checkpointed edge set — the pair pipeline above is
-    # evaluated exactly once (pairs with doc_a == doc_b don't occur in the
-    # LSH outputs, so no node is lost to the self-loop filter).
-    nodes = (
-        edges0.select(F.col("u").alias("doc"))
-        .union(edges0.select(F.col("v").alias("doc")))
-        .distinct()
-    )
     spark = pairs.sparkSession
     n_edges = n_obs.get["n"]
     # Adaptive round parallelism: the loop runs ~5 shuffles per round,
@@ -1277,6 +1291,14 @@ def connected_components(pairs: DataFrame, max_rounds: int = 25) -> DataFrame:
 
     def star_result(edges: DataFrame) -> DataFrame:
         # At convergence edges form stars centered at each component's min.
+        # Nodes from the checkpointed edge set — the pair pipeline above is
+        # evaluated exactly once (pairs with doc_a == doc_b don't occur in
+        # the LSH outputs, so no node is lost to the self-loop filter).
+        nodes = (
+            edges0.select(F.col("u").alias("doc"))
+            .union(edges0.select(F.col("v").alias("doc")))
+            .distinct()
+        )
         return (
             nodes.join(
                 edges.select(F.col("u").alias("doc"), F.col("v").alias("cluster")),
@@ -1287,13 +1309,21 @@ def connected_components(pairs: DataFrame, max_rounds: int = 25) -> DataFrame:
         )
 
     max_rows = local_finish_max_rows(spark)
+    # star_result's schema, read off the edge schema: doc is the union of
+    # u and v, and cluster = coalesce(left-joined v, doc) is nullable only
+    # where doc is.
+    u_f, v_f = edges0.schema
+    doc_nullable = u_f.nullable or v_f.nullable
+    result_schema = StructType(
+        [StructField("doc", u_f.dataType, doc_nullable), StructField("cluster", v_f.dataType, doc_nullable)]
+    )
 
     def local_finish(edges: DataFrame, n: int, rounds_done: int) -> DataFrame | None:
         if n > max_rows:
             return None
         tbl = _collect_local_finish(edges, "connected_components", rounds_done, n)
         nodes_, labels = union_find_labels(tbl.column("u").to_numpy(), tbl.column("v").to_numpy())
-        return _arrow_frame(spark, star_result(edges).schema, [nodes_, labels])
+        return _arrow_frame(spark, result_schema, [nodes_, labels])
 
     return iterate(
         edges0,
@@ -4496,7 +4526,7 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, source) projection — both sides prunable to two columns at
     the scan — and a K x K hash-agg whose output is bounded by source
     cardinality, not corpus size. Nothing is persisted."""
-    cand = _lsh_candidates(_minhash_doc_agg(spark, sf_dir))
+    cand = _lsh_candidates(_minhash_doc_agg(spark, sf_dir)).distinct()
     src = load_tables(spark, sf_dir)["documents"].select("doc_id", "source")
     return (
         cand.join(src.withColumnsRenamed({"doc_id": "doc_a", "source": "sa"}), "doc_a")
@@ -5019,32 +5049,27 @@ def dedup_cross_split_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     text_train_val_split so the three audits describe one split.
 
     Scale shape: the pair plan of dedup_minhash_lsh with the band
-    self-join replaced by a train-side x val-side band join (strictly
-    smaller: the val side is ~10% of the corpus, so candidate generation
-    is CHEAPER than full dedup). One per-document aggregate
-    (:func:`_minhash_doc_agg`) feeds the band join and the exact-Jaccard
-    join back (:func:`_candidate_overlap`, exact on multisets for any
-    candidate pair, ordered or not); the per-val rollup is bounded by
-    confirmed matches. Nothing is persisted."""
-    agg = _minhash_doc_agg(spark, sf_dir)
-    split = F.when(
-        F.expr("CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 6), 16, 10) AS BIGINT) % 100") < 10,
-        "val",
-    ).otherwise("train")
-    bands = _band_df(agg).withColumn("split", split)
-    cand = (
-        bands.filter(F.col("split") == "train").alias("t")
-        .join(bands.filter(F.col("split") == "val").alias("v"), ["band", "band_key"])
-        .select(F.col("t.doc_id").alias("doc_a"), F.col("v.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    self-join keeping train-side x val-side rows instead of doc_a <
+    doc_b: the split flag rides on the band rows next to (n, hs), and
+    the pair condition ``val_a < val_b`` reads both sides, so the two
+    sides still share one exchange and one action shingles the
+    documents once (:func:`_lsh_candidates`). The exact Jaccard is
+    priced on the join output (:func:`_candidate_overlap`, exact on
+    multisets for any candidate pair, ordered or not), thresholded and
+    made distinct; the per-val rollup is bounded by confirmed matches.
+    Nothing is persisted."""
+    split_val = F.expr(
+        "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 6), 16, 10) AS BIGINT) % 100"
+    ) < 10
+    agg = _minhash_doc_agg(spark, sf_dir).withColumn("val", split_val)
     confirmed = (
-        _candidate_overlap(cand, agg)
+        _candidate_overlap(_lsh_candidates(agg, "val", *_OVERLAP_COLS, key="val"))
         .filter(F.col("ni") / F.col("nu") >= JACCARD_THRESHOLD)
         .select(
             F.col("doc_b").alias("val_doc"), F.col("doc_a").alias("train_doc"),
             F.expr("(10000 * ni) div nu").alias("jaccard_bp"),
         )
+        .distinct()
     )
     best = confirmed.groupBy("val_doc").agg(
         F.max("jaccard_bp").alias("best_jaccard_bp"),

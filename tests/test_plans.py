@@ -596,3 +596,46 @@ def test_auc_window_is_partitioned(spark, sf_dir):
     assert "Window" in plan
     # the window spec carries the group key as its partition expression
     assert "windowspecdefinition(source" in plan
+
+
+def test_minhash_pair_plan_scans_documents_once(spark, sf_dir):
+    """The band rows carry the exact-Jaccard payload (n, hs), so the two
+    sides of the band self-join read one exchange: after an action, the
+    final adaptive plan scans ``documents`` once and every other copy is
+    a ReusedExchange (no join back, no second shingle pipeline) — for the
+    pair plan and for the two audits built on the same band join."""
+    import re
+
+    from sol_spark.operators.dedup import (
+        _minhash_pairs_plan,
+        dedup_cross_split_decontam,
+        dedup_minhash_calibration,
+    )
+
+    for df in (
+        _minhash_pairs_plan(spark, sf_dir).select("doc_a", "doc_b", "jaccard_bp"),
+        dedup_minhash_calibration(spark, sf_dir),
+        dedup_cross_split_decontam(spark, sf_dir),
+    ):
+        assert df.collect()
+        final = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+        assert "isFinalPlan=true" in final
+        assert len(re.findall(r"Scan parquet [^\n]*documents", final)) == 1, final
+        assert "ReusedExchange" in final, final
+
+
+def test_local_finish_result_sorts_without_exchange(spark, sf_dir):
+    """A local-finish result is one partition, which satisfies orderBy's
+    ordered distribution: sorting it plans no Exchange (no sampling job,
+    no range shuffle)."""
+    from sol_spark.operators.dedup import dedup_clusters, graph_mst, release_result
+
+    for build, key in ((dedup_clusters, ("doc",)), (graph_mst, ("doc_a", "doc_b"))):
+        df = build(spark, sf_dir)
+        try:
+            out = df.orderBy(*key)
+            assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
+            rows = out.collect()
+            assert rows and rows == sorted(rows, key=lambda r: tuple(r[k] for k in key))
+        finally:
+            release_result(df)
