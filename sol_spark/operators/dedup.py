@@ -1168,6 +1168,18 @@ DEDUP_CLUSTERS_ORACLE = _cc_oracle_sql(
 )
 
 
+def _canonical_edges(pairs: DataFrame) -> DataFrame:
+    """Canonical directed edges u -> v with u > v (self-loops dropped) of a
+    (doc_a, doc_b) pair DF, distinct."""
+    return (
+        pairs.select(
+            F.greatest("doc_a", "doc_b").alias("u"), F.least("doc_a", "doc_b").alias("v")
+        )
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+    )
+
+
 def connected_components(pairs: DataFrame, max_rounds: int = 25) -> DataFrame:
     """(doc_a, doc_b) undirected pair DF -> (doc, cluster) where cluster is
     the component's min node id.
@@ -1220,14 +1232,7 @@ def connected_components(pairs: DataFrame, max_rounds: int = 25) -> DataFrame:
     from pyspark.sql import Observation
     from pyspark.sql.types import StructField, StructType
 
-    # Canonical directed edges u -> v with u > v (self-loops dropped).
-    edges0 = (
-        pairs.select(
-            F.greatest("doc_a", "doc_b").alias("u"), F.least("doc_a", "doc_b").alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    edges0 = _canonical_edges(pairs)
     # The edge count rides the checkpoint job as an Observation: it sizes
     # the round width and feeds the local-finish gate with no count job.
     n_obs = Observation("cc_edges")

@@ -233,8 +233,9 @@ def events_stream(
     spark: SparkSession, sf_dir: str, max_files_per_trigger: int = 1, n_files: int = 1
 ) -> tuple[DataFrame, str]:
     """Replay the events fixture as a file-source stream. The source files
-    are MATERIALIZED FROM THE BATCH-NORMALIZED FRAME (`_read`), never copied
-    raw: the fixture's physical timestamp encoding has changed across driver
+    are MATERIALIZED FROM THE BATCH-NORMALIZED FRAME (the catalog's
+    ``events``, :func:`sol_spark.tables.load_tables`), never copied raw:
+    the fixture's physical timestamp encoding has changed across driver
     generations (int64 nanos in round 1, micros in round 3), and a raw copy
     plus hard-coded decode schema silently misdecodes one or the other
     (micros read as nanos -> 1970 windows -> every stream==batch test red).
@@ -243,9 +244,9 @@ def events_stream(
     that many files so ``maxFilesPerTrigger=1`` yields multiple
     micro-batches (state carried across batches, the real incremental path).
     Returns (stream_df, tmpdir to clean up)."""
-    from sol_spark.tables import _read
+    from sol_spark.tables import load_tables
 
-    batch = _read(spark, os.path.join(sf_dir, "events.parquet"))
+    batch = load_tables(spark, sf_dir, register_views=False)["events"]
     tmp = tempfile.mkdtemp(prefix="solspark_stream_")
     if n_files <= 1:
         batch.coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -713,9 +714,10 @@ def events_arrival_stream(
     bound. Same materialize-through-Spark discipline as
     :func:`events_stream` (never copy the raw fixture; stagger mtimes so
     the file source replays in arrival order)."""
-    from sol_spark.tables import _read
+    from sol_spark.tables import load_tables
 
-    batch = _read(spark, os.path.join(sf_dir, "events.parquet")).withColumn(
+    events = load_tables(spark, sf_dir, register_views=False)["events"]
+    batch = events.withColumn(
         "arr",
         F.expr(
             "timestampdiff(SECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
@@ -730,9 +732,8 @@ def events_arrival_stream(
     base = _time.time() - 300
     for i, f in enumerate(parts):
         os.utime(os.path.join(tmp, f), (base + i, base + i))
-    schema = _read(spark, os.path.join(sf_dir, "events.parquet")).schema
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(tmp)
         .withColumn("ts", F.col("ts").cast("timestamp"))

@@ -340,9 +340,9 @@ def test_local_checkpoint_records_rdd_id(spark):
 def test_no_session_conf_mutation_in_operators():
     """r3 verdict defect #1: no operator may set session-global SQL conf
     (a concurrent query would observe it). Static gate over the operator
-    and query modules; the sole allowed site is tables.py's one-time
-    legacy-fixture read fallback (nanosAsLong), which is schema-probed and
-    session-sticky by design."""
+    and query modules; the sole allowed site is tables.py's nanosAsLong
+    set for a fixture whose footer holds a nanosecond timestamp, which is
+    footer-probed and session-sticky by design."""
     import pathlib
 
     import sol_spark

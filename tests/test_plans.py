@@ -639,3 +639,19 @@ def test_local_finish_result_sorts_without_exchange(spark, sf_dir):
             assert rows and rows == sorted(rows, key=lambda r: tuple(r[k] for k in key))
         finally:
             release_result(df)
+
+
+def test_clusters_edges_distinct_once_over_pair_plan(spark, sf_dir):
+    """connected_components' edges0 over the MinHash pair plan aggregates
+    once above the band join: RemoveRedundantAggregates drops the pair
+    plan's own distinct, because the (u, v) distinct above it ignores
+    duplicates. So dedup_clusters runs no second distinct shuffle."""
+    from sol_spark.operators.dedup import _canonical_edges, _minhash_pairs_plan
+
+    edges0 = _canonical_edges(_minhash_pairs_plan(spark, sf_dir).select("doc_a", "doc_b"))
+    nodes = [
+        line.lstrip(" :+-")
+        for line in edges0._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    ]
+    join = next(i for i, node in enumerate(nodes) if node.startswith("Join "))
+    assert [n for n in nodes[:join] if n.startswith("Aggregate ")] == [nodes[0]], "\n".join(nodes)
